@@ -10,8 +10,19 @@ import org.apache.spark.sql.functions._
   *
   *   spark-submit --class graft.Run <jar> <sfDir> <outDir> [--resume]
   *
-  * Stages (each materialized + manifest-logged + per-partition lineage):
-  *   transcripts → linked → triples → canon → metrics
+  * Stage graph (each stage materialized + manifest-logged + per-partition
+  * lineage by RunManifest; an arrow is "reads"):
+  *
+  *   transcripts ─▶ linked ─┬─▶ triples ─┬─▶ canon
+  *                          │            └─▶ metrics_stats     ┐ overlap
+  *                          └─▶ metrics_unmapped               ┘
+  *
+  * The main chain runs on the calling thread. metrics_unmapped starts as
+  * soon as linked is staged and overlaps triples → canon; metrics_stats
+  * starts as soon as triples is staged and overlaps canon. At this scale
+  * each stage is a handful of short Spark jobs whose fixed cost leaves
+  * cores idle, so the side stages fill them. `execute` returns or throws
+  * only after every stage has finished.
   * A killed run restarted with --resume re-executes only missing stages.
   */
 object Run {
@@ -36,7 +47,8 @@ object Run {
     spark.stop()
   }
 
-  /** Runs all stages; returns (triples rows, canon rows) for callers/tests. */
+  /** Runs all stages; returns (triples rows, canon rows) for callers/tests,
+    * taken from the manifest (no count job). */
   def execute(spark: SparkSession, sfDir: String, outDir: String,
               resume: Boolean): (Long, Long) = {
     val m = new RunManifest(spark, outDir, resume)
@@ -47,41 +59,63 @@ object Run {
       // per-conv work is co-located
       Pipeline.transcripts(spark, sfDir)
         .repartition(spark.sparkContext.defaultParallelism, col("conv_id"))
-    }
+    }.df
     val linked = m.stage("linked") {
       Link.linkAll(spark, sfDir, Mentions.extract(transcripts))
+    }.df
+    alongside(m.stage("metrics_unmapped") { Metrics.unmappedHistogram(linked) }) {
+      val triples = m.stage("triples", partitionCols = Seq("bucket")) {
+        // bucket = hash(subj) — the Iceberg bucket(subj) analog, written as a
+        // DIRECTORY partition (K1: the per-entity sink) so per-entity reads
+        // prune to one bucket directory instead of scanning the uber table.
+        // Shuffle onto the bucket key before the write: without it every
+        // upstream task writes into every bucket directory (tasks × buckets
+        // files) and the commit + every downstream scan pays the fan-out;
+        // with it each bucket is written wholly by one task (one file per
+        // bucket, splittable on read). Bucket count is SCALE-ADAPTIVE:
+        // 4× the core count (min 16) — a fixed 16 buckets hashed into 32
+        // reduce partitions left ≤16 of them non-empty (guide §2.5: too few
+        // distinct synthetic key values), capping the write stage at half
+        // the cores; 4× gives ~(1-e^-4) ≈ 98% expected task occupancy while
+        // keeping per-bucket files large at production scale.
+        val buckets = math.max(16, 4 * spark.sparkContext.defaultParallelism)
+        Emit.allTriples(spark, sfDir, transcripts, linked)
+          .withColumn("bucket", pmod(xxhash64(col("subj")), lit(buckets)))
+          .repartition(spark.sparkContext.defaultParallelism, col("bucket"))
+      }
+      val t = triples.df.drop("bucket")
+      val canon = alongside(m.stage("metrics_stats") { Metrics.convStats(t) }) {
+        m.stage("canon") {
+          // Measured and REJECTED (r6): routing ctx/act rows around the
+          // canonicalize rewrite (Pipeline.canonTriples's namespace split)
+          // was wall-neutral here — over a staged parquet input the rewrite's
+          // broadcast join is not the cost — and the two-branch union
+          // fragmented the stage output 65 → 129 partitions (worse file
+          // layout for every canon consumer). The single-pass rewrite stays.
+          SameAs.canonicalize(t, SameAs.closure(SameAs.edgesOf(t)))
+        }
+      }
+      (triples.rows, canon.rows)
     }
-    val triples = m.stage("triples", partitionCols = Seq("bucket")) {
-      // bucket = hash(subj) — the Iceberg bucket(subj) analog, written as a
-      // DIRECTORY partition (K1: the per-entity sink) so per-entity reads
-      // prune to one bucket directory instead of scanning the uber table.
-      // Shuffle onto the bucket key before the write: without it every
-      // upstream task writes into every bucket directory (tasks × buckets
-      // files) and the commit + every downstream scan pays the fan-out;
-      // with it each bucket is written wholly by one task (one file per
-      // bucket, splittable on read). Bucket count is SCALE-ADAPTIVE:
-      // 4× the core count (min 16) — a fixed 16 buckets hashed into 32
-      // reduce partitions left ≤16 of them non-empty (guide §2.5: too few
-      // distinct synthetic key values), capping the write stage at half
-      // the cores; 4× gives ~(1-e^-4) ≈ 98% expected task occupancy while
-      // keeping per-bucket files large at production scale.
-      val buckets = math.max(16, 4 * spark.sparkContext.defaultParallelism)
-      Emit.allTriples(spark, sfDir, transcripts, linked)
-        .withColumn("bucket", pmod(xxhash64(col("subj")), lit(buckets)))
-        .repartition(spark.sparkContext.defaultParallelism, col("bucket"))
+  }
+
+  /** Runs `side` on a new thread while `main` runs on this one and returns
+    * `main`'s result once BOTH have finished; a failure of either is thrown
+    * only then (a second failure rides along as suppressed), so no branch
+    * outlives the call. The thread is created here, by the caller, so it
+    * inherits the caller's Spark local properties as they are now (job
+    * group, scheduler pool) — and, created outside any action, never a
+    * `spark.sql.execution.id`. */
+  private[graft] def alongside[T](side: => Any)(main: => T): T = {
+    var sideErr: Option[Throwable] = None
+    val t = new Thread(() =>
+      try side catch { case e: Throwable => sideErr = Some(e) }, "graft-run-branch")
+    t.start()
+    val res = try main catch { case e: Throwable =>
+      t.join(); sideErr.foreach(e.addSuppressed); throw e
     }
-    val canon = m.stage("canon") {
-      // Measured and REJECTED (r6): routing ctx/act rows around the
-      // canonicalize rewrite (Pipeline.canonTriples's namespace split)
-      // was wall-neutral here — over a staged parquet input the rewrite's
-      // broadcast join is not the cost — and the two-branch union
-      // fragmented the stage output 65 → 129 partitions (worse file
-      // layout for every canon consumer). The single-pass rewrite stays.
-      val t = triples.drop("bucket")
-      SameAs.canonicalize(t, SameAs.closure(SameAs.edgesOf(t)))
-    }
-    m.stage("metrics_unmapped") { Metrics.unmappedHistogram(linked) }
-    m.stage("metrics_stats") { Metrics.convStats(triples.drop("bucket")) }
-    (triples.count(), canon.count())
+    t.join()
+    sideErr.foreach(e => throw e)
+    res
   }
 }

@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   *   plans <outDir> [q1,q2,...]   write .explain("formatted") per query
   *   time  [q1,q2,...]            warm-stage timing with a noop sink
   *                                (guide §1.4) instead of count()
-  *   e2e                          one Run.execute with per-stage wall_ms
-  *                                echoed from the manifest
+  *   e2e                          one Run.execute with its manifest echoed
+  *                                and a stage timeline (start_ms..end,
+  *                                overlapping stages side by side)
   *
   * Env contract matches Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
@@ -92,8 +93,20 @@ object BenchExtra {
         val (t, c) = Run.execute(spark, sfDir, outDir, resume = false)
         println(f"[e2e] total ${(System.nanoTime() - t0) / 1e9}%.2fs " +
           s"triples=$t canon=$c")
-        println(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(s"$outDir/manifest.jsonl")))
+        import scala.jdk.CollectionConverters._
+        val lines = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(s"$outDir/manifest.jsonl")).asScala.toSeq
+        lines.foreach(println)
+        val spans = lines.map { l =>
+          def f(k: String) = graft.io.RunManifest.field(l, k).getOrElse("0")
+          val start = f("start_ms").toLong
+          (f("stage"), start, start + f("wall_ms").toLong)
+        }
+        val width = 60.0 / math.max(1L, spans.map(_._3).max)
+        spans.sortBy(_._2).foreach { case (s, a, b) =>
+          val bar = " " * (a * width).toInt + "#" * math.max(1, ((b - a) * width).toInt)
+          println(f"[e2e] $s%-17s $a%6d..$b%6d ms |$bar")
+        }
     }
     spark.stop()
   }
