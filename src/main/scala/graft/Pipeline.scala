@@ -25,44 +25,56 @@ object Pipeline {
     Link.linkAll(s, d, mentions(s, d))
 
   def triples(s: SparkSession, d: String): DataFrame =
-    Emit.allTriples(s, d, transcripts(s, d), linked(s, d))
+    triplesWithConv(s, d).drop("conv")
 
   /** The triple table + precomputed `conv` column (for Quads/convStats —
-    * drops the per-row subject regex those consumers otherwise pay). */
-  def triplesWithConv(s: SparkSession, d: String): DataFrame =
-    Emit.allTriplesConv(s, d, transcripts(s, d), linked(s, d))
+    * drops the per-row subject regex those consumers otherwise pay). One
+    * transcripts frame feeds both the skeleton and the mention path. */
+  def triplesWithConv(s: SparkSession, d: String): DataFrame = {
+    val tr = transcripts(s, d)
+    Emit.allTriplesConv(s, d, tr, Link.linkAll(s, d, Mentions.extract(tr)))
+  }
 
   def sameAsClusters(s: SparkSession, d: String): DataFrame =
     SameAs.closure(SameAs.edgesOf(triples(s, d)))
 
+  /** The sameAs-canonical triple table. It builds transcripts → linked →
+    * emission ONCE and picks one of two plans over those frames by whether
+    * the emission frame is already materialized. Both branches emit the
+    * identical row multiset: the cold branch is the Verify-gated plan, the
+    * cached branch is set-equality-tested against it (OperatorSpecs).
+    *
+    * The probe has a side effect: building the emission frame persists
+    * `linked` (Emit.persistedLinked) when it is not cached yet, so a cold
+    * call leaves `linked` registered in the session's cache until the
+    * caller clears it (`spark.catalog.clearCache()`); the cold branch reads
+    * it three times (facts, context, activity).
+    *
+    * COLD (nothing cached — the scaling protocol's compute path, a
+    * standalone canon query): materialize ONLY the fact triples (they feed
+    * the edge extraction + both rewrite branches — canonicalize's
+    * read-twice input contract); the snippet-heavy context/activity
+    * triples stream through exactly once, untouched by the rewrite
+    * (ctx/act subjects/objects are canon-inert by namespace), and a bare
+    * count over them prunes the string building entirely. Measured
+    * (local[2] × scale-19 compute-only, interleaved A/B): 55.7-57.7 s vs
+    * 248-355 s for a full-table checkpoint — the 58.7M-row copy
+    * materializes every string column and spills.
+    *
+    * CACHED (the emission frame is materialized — the warm harness, any
+    * staged context): checkpoint the full table once (a cheap cache read)
+    * and split it by subject namespace; fact emission is NOT re-run per
+    * call. Measured (full warm suite): 2.3-2.8 s vs 5.9-6.9 s for the
+    * fact-only shape, whose per-call fact re-emission (three shuffles +
+    * checkpoint) pays full price under the pass's cache pressure. In the
+    * staged Run the triples parquet plays the checkpoint's role outright.
+    */
   def canonTriples(s: SparkSession, d: String): DataFrame = {
-    // PLAN SELECTION by what is already materialized (both branches emit
-    // the identical row multiset; the cold branch is the Verify-gated
-    // plan, the cached branch is set-equality-tested against it):
-    //
-    // COLD (nothing cached — the scaling protocol's compute path, a
-    // standalone canon query): materialize ONLY the fact triples (they
-    // feed the edge extraction + both rewrite branches — canonicalize's
-    // read-twice input contract); the snippet-heavy context/activity
-    // triples stream through exactly once, untouched by the rewrite
-    // (ctx/act subjects/objects are canon-inert by namespace), and a
-    // bare count over them prunes the string building entirely.
-    // Measured (local[2] × scale-19 compute-only, interleaved A/B):
-    // 55.7-57.7 s vs 248-355 s for a full-table checkpoint — the
-    // 58.7M-row copy materializes every string column and spills.
-    //
-    // CACHED (the emission stage frame is already materialized — the
-    // warm harness, any staged context): checkpoint the full table once
-    // (a cheap cache read) and split it by subject namespace; fact
-    // emission is NOT re-run per call. Measured (full warm suite):
-    // 2.3-2.8 s vs 5.9-6.9 s for the fact-only shape, whose per-call
-    // fact re-emission (three shuffles + checkpoint) pays full price
-    // under the pass's cache pressure. In the staged Run the triples
-    // parquet plays the checkpoint's role outright.
-    val staged = triplesWithConv(s, d)
-    if (staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      import graft.model.Ns
-      val all = triples(s, d).localCheckpoint()
+    val tr = transcripts(s, d)
+    val l = Emit.persistedLinked(Link.linkAll(s, d, Mentions.extract(tr)))
+    val staged = Emit.allTriplesConv(s, d, tr, l)
+    if (staged.storageLevel != storage.StorageLevel.NONE) {
+      val all = staged.drop("conv").localCheckpoint()
       val isCtxAct =
         col("subj").startsWith(Ns.ctx) || col("subj").startsWith(Ns.act)
       val facts = all.filter(!isCtxAct)
@@ -70,9 +82,7 @@ object Pipeline {
       SameAs.canonicalize(facts, canon)
         .unionAll(all.filter(isCtxAct)) // ctx/act rows — canon-inert bypass
     } else {
-      val l = Emit.persistedLinked(linked(s, d))
-      val facts = Emit.factTriples(s, d, transcripts(s, d), l)
-        .localCheckpoint()
+      val facts = Emit.factTriples(s, d, tr, l).localCheckpoint()
       val canon = SameAs.closure(SameAs.edgesOf(facts))
       SameAs.canonicalize(facts, canon)
         .unionAll(Emit.contextTriples(l))

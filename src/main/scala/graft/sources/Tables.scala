@@ -1,16 +1,43 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet readers for the driver-generated test tables (TESTDATA.md).
   * In production these are Iceberg tables (`spark.read.table`); the sandbox
   * ships plain parquet, so the reader is a thin seam — everything downstream
   * sees a DataFrame either way. Filters/projections placed by operators reach
   * the scan via Catalyst pushdown (verified in plan tests).
+  *
+  * Every table's schema is declared (the catalog's role for an Iceberg
+  * table), so building a frame reads no footer: an inferring
+  * `spark.read.parquet` runs one Spark job per call, and every catalog query
+  * builds its plan from several reads. The timestamps are naive microseconds
+  * (TIMESTAMP_NTZ, what Spark infers for these files); TablesSpec pins each
+  * declared schema to the inferred one.
   */
 object Tables {
+  val schemas: Map[String, StructType] = Map(
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "region" -> "r_regionkey INT, r_name STRING",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (n, ddl) => n -> StructType.fromDDL(ddl) }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
 
   def events(s: SparkSession, d: String): DataFrame    = t(s, d, "events")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

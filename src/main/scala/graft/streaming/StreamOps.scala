@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Mentions
-import graft.sources.SynthTranscripts
+import graft.sources.{SynthTranscripts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -32,10 +32,10 @@ final case class SessionRow(user_id: Long, session_id: String, n_events: Long,
   */
 object StreamOps {
 
-  /** events parquet as a file-source stream (schema pinned from the batch
-    * read — required by readStream). The file source needs a DIRECTORY to
-    * watch; production streams land in one, the test fixture is a single
-    * file — so it is symlinked into a scratch dir. */
+  /** events parquet as a file-source stream (schema pinned from the
+    * declared table schema — required by readStream). The file source
+    * needs a DIRECTORY to watch; production streams land in one, the test
+    * fixture is a single file — so it is symlinked into a scratch dir. */
   def eventStream(spark: SparkSession, dir: String): DataFrame =
     eventStreamAt(spark, dir,
       java.nio.file.Files.createTempDirectory("graft-stream").toString)
@@ -47,7 +47,7 @@ object StreamOps {
   def eventStreamAt(spark: SparkSession, dir: String,
                     scratch: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemas("events")
     Files.createDirectories(Paths.get(scratch))
     val link = Paths.get(scratch).resolve("events.parquet")
     if (!Files.exists(link))
@@ -86,7 +86,7 @@ object StreamOps {
     * as eventStream). */
   def documentStream(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemas("documents")
     val scratch = Files.createTempDirectory("graft-stream")
     Files.createSymbolicLink(
       scratch.resolve("documents.parquet"), Paths.get(s"$dir/documents.parquet"))
@@ -227,7 +227,7 @@ object StreamOps {
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(s"$outDir/linked").count()
+    spark.read.schema(linked.schema).parquet(s"$outDir/linked").count()
   }
 
   /** Drain a stream fully into a memory sink and return the batch result.

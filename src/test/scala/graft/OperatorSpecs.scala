@@ -82,6 +82,11 @@ class DedupSpec extends SparkSpec {
     assert(cand == Set((1L, 2L)))
   }
 
+  test("corpus keeps the source doc_id type (no widening)") {
+    val docs = sources.Tables.documents(spark, sfDir)
+    assert(Dedup.corpus(docs).schema("doc_id").dataType == docs.schema("doc_id").dataType)
+  }
+
   test("simhash: identical word sets → identical hash; disjoint sets differ") {
     val docs = Seq((1L, "alpha beta gamma"), (2L, "gamma alpha beta alpha"),
       (3L, "zeta eta theta iota kappa")).toDF("doc_id", "text")

@@ -1,11 +1,25 @@
 package graft
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 /** Plan-quality regression guards: the properties that make this pipeline
   * scale must stay visible in the physical plan (SURVEY.md §4) — a future
   * edit that silently turns a dictionary link into a fact-side shuffle or
   * widens a scan should fail here, not in production.
   */
 class PlanQualitySpec extends SparkSpec {
+
+  private object Plan extends AdaptiveSparkPlanHelper
+
+  /** The physical nodes of `df`'s plan that are a `T`, adaptive stages
+    * included: RDDScanExec reads a checkpointed frame, FileSourceScanExec
+    * a file. */
+  private def nodes[T <: SparkPlan: ClassTag](df: DataFrame): Seq[T] =
+    Plan.collect(df.queryExecution.executedPlan) { case n: T => n }
 
   test("linking is ONE broadcast hash join over ONE scan of the input") {
     // other suites may have persisted the same linked plan — a cached
@@ -137,7 +151,7 @@ class PlanQualitySpec extends SparkSpec {
       "kg_education" -> operators.Education.educationTriples(Pipeline.linked(spark, sfDir)))
     for ((name, df) <- cases) {
       val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("Scan ExistingRDD"),
+      assert(nodes[RDDScanExec](df).nonEmpty,
         s"$name must read its checkpointed emission frame")
       assert(!p.contains("Window"),
         s"$name emission must not replay its window per branch")
@@ -148,10 +162,10 @@ class PlanQualitySpec extends SparkSpec {
     // over its checkpointed frame (r6): the emission plan must read the
     // materialized frame (join + computed columns paid once there) and
     // carry no join/window of its own
-    val wa = operators.Works.agentTriples(
+    val waDf = operators.Works.agentTriples(
       sources.Tables.orders(spark, sfDir), sources.Tables.customer(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(wa.contains("Scan ExistingRDD"),
+    val wa = waDf.queryExecution.executedPlan.toString
+    assert(nodes[RDDScanExec](waDf).nonEmpty,
       "works_agents must read its checkpointed emission frame")
     assert(!wa.contains("Join") && !wa.contains("Window"),
       "works_agents emission must stay single-pass and join-free")
@@ -164,19 +178,17 @@ class PlanQualitySpec extends SparkSpec {
     // an edit back to the base ∪ near ∪ exact self-union re-plans the
     // documents scan + spread exchange once per branch (3× the read)
     val corpus = operators.Dedup.corpus(sources.Tables.documents(spark, sfDir))
-    val cp = corpus.queryExecution.executedPlan.toString
-    val docScans = "documents\\.parquet".r.findAllIn(cp).size
+    val docScans = nodes[FileSourceScanExec](corpus).size
     assert(docScans == 1, s"corpus must scan documents once, found $docScans")
-    assert(cp.contains("Generate"), "corpus augmentation rides one explode")
+    assert(nodes[GenerateExec](corpus).nonEmpty, "corpus augmentation rides one explode")
     // the band frame feeds BOTH sides of the bucket self-join: candidates
     // must read the checkpointed frame, never re-run corpus→shingles→
     // minhash→bands once per side (the r6 before-plan's 12-scan shape)
     val cand = operators.Dedup.lshCandidates(operators.Dedup.bands(
       operators.Dedup.minhash(operators.Dedup.shinglesRaw(corpus))))
-    val p = cand.queryExecution.executedPlan.toString
-    assert(p.contains("Scan ExistingRDD"),
+    assert(nodes[RDDScanExec](cand).nonEmpty,
       "candidates must read the materialized band frame")
-    assert(!p.contains("parquet"),
+    assert(nodes[FileSourceScanExec](cand).isEmpty,
       "the candidate self-join must not re-scan the corpus per side")
     Caches.release(spark)
   }
